@@ -5,11 +5,10 @@ import org.apache.spark.sql.functions.{col, max, min}
 
 /** Sustained-ingest throughput for the CDC merge path (r9 verdict
   * item 4): replay the sf feed as N time-ordered micro-batches through
-  * [[graft.streaming.CdcPipeline.mergeBatch]] and report events/s plus
-  * a PER-PHASE attribution of each commit's cost (via the pipeline's
-  * phaseRecorder hook) — where the fixed per-commit overhead actually
-  * goes: batch materialization, the touched-bucket collect, the
-  * read-merge-write job, pointer flips, manifest append, GC.
+  * [[graft.streaming.CdcPipeline.mergeBatch]] and report events/s with
+  * the warm and cold wall times. A per-layer split of a commit comes
+  * from outside the engine: `perfbench/run.py --trace 1` attributes it
+  * with public Spark listeners and file-system statistics.
   *
   *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 runMain graft.CdcMergeBench
   *
@@ -44,13 +43,7 @@ object CdcMergeBench {
       keyCols = Seq("key"), orderCols = Seq("ts_us", "event_id"),
       opCol = "op")
 
-    val phases = scala.collection.mutable.LinkedHashMap[String, Double]()
-    streaming.CdcPipeline.phaseRecorder = Some { (p, s) =>
-      phases(p) = phases.getOrElse(p, 0.0) + s
-    }
-
-    def replay(nb: Int): (Double, Map[String, Double]) = {
-      phases.clear()
+    def replay(nb: Int): Double = {
       val statePath = s"/tmp/graft_mergebench_state_$nb"
       val fs = new org.apache.hadoop.fs.Path(statePath)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -63,36 +56,24 @@ object CdcMergeBench {
           feed.filter(col("ts_us") >= from && col("ts_us") < until),
           statePath, cfg, i)
       }
-      ((System.nanoTime() - t0) / 1e9, phases.toMap)
+      (System.nanoTime() - t0) / 1e9
     }
 
-    // wall and phases come from the SAME replay (the warm one) so the
-    // attribution always sums ≤ its wall (ADVICE r10: reporting
-    // min(cold, warm) beside warm-only phases let phase sums exceed
-    // the wall when the cold run happened to be faster, pushing
-    // driver_unaccounted_sec negative). The cold wall is kept as its
-    // own field for the compile+JIT delta.
+    // the cold wall is kept as its own field for the compile+JIT delta
     val results = batchCounts.map { nb =>
-      val (w1, _) = replay(nb)         // cold: pays plan compile + JIT
-      val (w2, ph) = replay(nb)        // warm: the reported number
-      (nb, w2, w1, ph)
+      val cold = replay(nb)            // pays plan compile + JIT
+      (nb, replay(nb), cold)           // warm: the reported number
     }
 
     val sb = new StringBuilder
     sb ++= s"""{"metric":"cdc_merge_sustained","sf_dir":"$sfDir","events":$n"""
-    results.foreach { case (nb, wall, cold, ph) =>
+    results.foreach { case (nb, wall, cold) =>
       val eps = n / wall
       sb ++= f""","b$nb":{"wall_sec":$wall%.3f,"wall_cold_sec":$cold%.3f"""
-      sb ++= f""","events_per_sec":$eps%.0f"""
-      val accounted = ph.values.sum
-      ph.toSeq.sortBy(-_._2).foreach { case (p, s) =>
-        sb ++= f""","$p%s_sec":$s%.3f"""
-      }
-      sb ++= f""","driver_unaccounted_sec":${wall - accounted}%.3f}"""
+      sb ++= f""","events_per_sec":$eps%.0f}"""
     }
     sb ++= "}"
     println(sb.toString)
-    streaming.CdcPipeline.phaseRecorder = None
     spark.stop()
   }
 }

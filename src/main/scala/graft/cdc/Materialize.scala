@@ -58,6 +58,11 @@ object Materialize {
              keyCols: Seq[String],
              orderCols: Seq[Column]): DataFrame = {
     val cols = changes.columns.toSeq
+    // the aggregate's struct column is named `__latest`; an input column
+    // of that name would be shadowed by it and silently mis-projected
+    require(!cols.contains("__latest"),
+      "Materialize.latest: input already has a column named __latest, " +
+        "the name this kernel reserves for its aggregate; rename it")
     changes
       .groupBy(keyCols.map(col): _*)
       .agg(max_by(struct(cols.map(col): _*), struct(orderCols: _*))

@@ -478,9 +478,10 @@ object CdcQueries extends QueryPack {
     // beyond every event time) and merging small files — and the store
     // must still read back as EXACTLY the latest-wins materialization
     // of the full log, which is all the oracle states. Crash-safety of
-    // the rewrite (pointer flips, never-reused dirs, expired-bucket
-    // pointer drops) is CdcPipelineSpec's job; this row proves the
-    // SEMANTICS survive the rewrite under the driver's independent eye.
+    // the rewrite (one fresh version dir, one `_CURRENT` flip, expired
+    // buckets leaving the bucket map) is CdcPipelineSpec's and
+    // ProtocolChaosSpec's job; this row proves the SEMANTICS survive the
+    // rewrite under the oracle's independent check.
     Q("cdc_compact_state",
       (s, d) => {
         import org.apache.hadoop.fs.Path

@@ -3,9 +3,10 @@ package graft.sources
 import org.apache.hadoop.fs.{FileContext, FileSystem, LocalFileSystem,
   Options, Path, RawLocalFileSystem}
 
-/** Tiny atomic pointer files — the shared primitive under every
-  * crash-safe commit protocol in the engine (the CDC sink's per-bucket
-  * pointers, the persisted IVF index's `_CURRENT`): write a
+/** Tiny atomic pointer files — the shared primitive under the engine's
+  * one crash-safe commit protocol ([[SegmentedIndex]]'s `_CURRENT`,
+  * used by the shingle index, the IVF raw / PQ / SQ8 indexes and the
+  * CDC state store): write a
   * uniquely-named tmp sibling, then ONE `FileContext` rename with
   * `Options.Rename.OVERWRITE`. A delete-then-rename pair would leave a
   * no-pointer window that a crash could turn into data loss; the
@@ -130,12 +131,21 @@ object PointerFile {
     * build's start time) is left alone.
     *
     * Segment manifests: a version dir may carry a `segments` text file
-    * (one version name per line) declaring that its data LIVES partly
-    * in older segment dirs (the IVF append path). GC here reads the
-    * manifests of every version it KEEPS and pins the referenced
-    * segments — computed at collection time by the collector itself,
-    * so any committer (a later rebuild included) is safe without
-    * having to know whether earlier versions were segmented.
+    * declaring that its data LIVES partly in older dirs. GC here reads
+    * the manifests of every version it KEEPS and pins what they name —
+    * computed at collection time by the collector itself, so any
+    * committer (a later rebuild included) is safe without having to
+    * know whether earlier versions were segmented. A line naming a
+    * version (`v-…`, the index append chains) pins that whole dir; a
+    * line naming a sub-dir (`v-…/__bucket=3`, the CDC store's bucket
+    * map) pins only that sub-dir, so a copy-on-write store keeps
+    * exactly the buckets its retained commits reference, never the
+    * dead buckets beside them.
+    *
+    * A committed version that falls out of the keep window loses its
+    * `_COMMITTED` marker here, synchronously, so the committed set
+    * listed right after this call is exactly the window; the deletes
+    * themselves run on the vacuum thread.
     */
   def commitVersion(fs: FileSystem, base: Path, version: String,
                     keep: Int = 2): Unit = {
@@ -161,20 +171,34 @@ object PointerFile {
           finally in.close()
         }
       }.toSet
-      val doomed = dirs.filter(p => p.getName < cutoff && !pinned(p.getName))
-      // The KEEP decision (list + manifest pinning) runs synchronously
-      // under this commit's view; only the physical deletes are
-      // deferred to the vacuum thread (r14: a superseded version is
-      // nlist cell dirs — at sf10 the serial delete put ~6 s of pure
-      // litter removal INSIDE append wall-clock, the classic vacuum-
-      // off-the-commit-path separation). Safe by construction: doomed
-      // versions are older than the keep window (no reader resolves
-      // them through _CURRENT) and unpinned; a racing commit that
-      // lists a half-deleted dir sees no marker → never counts it
-      // committed, and a double delete is a no-op.
-      if (doomed.nonEmpty) gcExec.execute(() =>
-        doomed.foreach(p =>
-          try fs.delete(p, true)
+      // version → the sub-dirs its kept lines name (`v-…/sub` lines)
+      val pinnedSubs = pinned.filter(_.contains('/'))
+        .groupBy(_.takeWhile(_ != '/'))
+        .map { case (v, ls) => v -> ls.map(_.dropWhile(_ != '/').tail) }
+      val old = dirs.filter(p => p.getName < cutoff && !pinned(p.getName))
+      val wasCommitted = committed.toSet
+      old.foreach { p =>
+        if (wasCommitted(p.getName))
+          fs.delete(new Path(p, CommittedMarker), false)
+      }
+      // The KEEP decision (list + manifest pinning + marker strip) runs
+      // synchronously under this commit's view; only the physical
+      // deletes are deferred to the vacuum thread (r14: a superseded
+      // version is nlist cell dirs — at sf10 the serial delete put ~6 s
+      // of pure litter removal INSIDE append wall-clock, the classic
+      // vacuum-off-the-commit-path separation). Safe by construction:
+      // old versions are outside the keep window (no reader resolves
+      // them through _CURRENT), a later manifest can only name what a
+      // kept manifest already names or its own version, and a double
+      // delete is a no-op.
+      if (old.nonEmpty) gcExec.execute(() =>
+        old.foreach(p =>
+          try pinnedSubs.get(p.getName) match {
+            case None => fs.delete(p, true)
+            case Some(subs) => fs.listStatus(p)
+              .filterNot(st => subs(st.getPath.getName))
+              .foreach(st => fs.delete(st.getPath, true))
+          }
           catch { case _: Throwable => () }))
     }
   }

@@ -3,48 +3,50 @@ package graft.sources
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The ONE segmented-index commit protocol every persisted standing
-  * artifact in the engine rides — the shingle dedup index
-  * (`graft.text.Dedup`) and the IVF family's raw / PQ / SQ8 indexes
-  * (`graft.sim.Similarity`). Before round 8 each family carried its
-  * own copy of the segments-manifest + `_CURRENT`-flip + tag plumbing;
-  * drift between the copies was the likeliest future correctness bug,
-  * so the protocol now lives here and the families keep only their
-  * domain payload writes (postings/sizes/df vs centroids/cells).
+/** The ONE commit protocol every persisted store in the engine rides —
+  * the shingle dedup index (`graft.text.Dedup`), the IVF family's raw /
+  * PQ / SQ8 indexes (`graft.sim.Similarity`) and the CDC state store
+  * (`graft.streaming.CdcPipeline`). The protocol lives here and the
+  * stores keep only their domain payload writes (postings/sizes/df vs
+  * centroids/cells vs bucketed state rows); drift between per-store
+  * copies was the likeliest future correctness bug.
   *
-  * Layout under an index root `dir`:
+  * Layout under a store root `dir`:
   *   - `v-<millis>-<uuid8>/` immutable version dirs holding the data
-  *     files a build or append wrote, plus:
+  *     files a build, append or merge wrote, plus:
   *     - `_COMMITTED`   marker dropped by [[PointerFile.commitVersion]]
-  *     - `segments`     text manifest (one version name per line) —
-  *       present on APPEND versions; the version's data lives in every
-  *       listed segment dir. Absent on base builds (the version IS its
-  *       only segment — backward compatible with pre-append indexes).
-  *     - `_APPEND_TAG`  opaque idempotency tag (streaming exactly-once)
+  *       (stripped again once the version leaves the keep window)
+  *     - `segments`     text manifest — the version's data lives in
+  *       every listed entry. Index appends list segment versions (the
+  *       parent's chain + itself); the CDC store lists one
+  *       `v-…/__bucket=N` sub-dir per live bucket. Absent on index base
+  *       builds (the version IS its only segment).
+  *     - `_APPEND_TAG`  opaque idempotency tag (index exactly-once)
+  *     - `_LABEL`       opaque commit name (the CDC store's batch id)
   *   - `_CURRENT` atomic pointer file naming the committed version.
   *
   * Crash-safety: data files land first; the single atomic `_CURRENT`
-  * overwrite-rename is the commit point. A crash mid-append leaves
+  * overwrite-rename is the commit point. A crash mid-commit leaves
   * `_CURRENT` on the parent — a partial dir has no `_COMMITTED` marker,
   * never consumes a GC keep slot, and is eventually collected as
   * litter. GC is manifest-aware ([[PointerFile.commitVersion]] pins
-  * every segment a KEPT version's manifest references).
+  * everything a KEPT version's manifest references).
   *
-  * Concurrency: the append protocol is SINGLE-WRITER (the streaming
-  * sinks run one foreachBatch at a time; batch appends are operator
-  * actions). Two concurrent appends would both chain off the same
-  * parent manifest and the second flip would silently drop the first
-  * append's segment — so [[commitAppend]] re-reads `_CURRENT`
-  * immediately before committing and fails loudly if another writer
-  * moved it. That fence turns the silent-loss race into an error with
-  * a retry instruction; it is conflict DETECTION on a narrow window,
-  * not a lock — serialize writers externally if an index has more
-  * than one.
+  * Concurrency: the protocol is SINGLE-WRITER (the streaming sinks run
+  * one foreachBatch at a time; batch appends are operator actions).
+  * Two concurrent commits would both derive from the same parent
+  * manifest and the second flip would silently drop the first one's
+  * data — so every commit re-reads `_CURRENT` immediately before
+  * flipping and fails loudly if another writer moved it. That fence
+  * turns the silent-loss race into an error with a retry instruction;
+  * it is conflict DETECTION on a narrow window, not a lock — serialize
+  * writers externally if a store has more than one.
   */
 object SegmentedIndex {
 
   val CurrentPointer = "_CURRENT"
   val AppendTag = "_APPEND_TAG"
+  val Label = "_LABEL"
   /** Multi-tag carry file a COMPACTED base writes: the union of every
     * idempotency tag that was committed on the chain it replaced.
     * Without it, compaction would erase the exactly-once history — a
@@ -62,6 +64,32 @@ object SegmentedIndex {
     */
   def currentVersion(spark: SparkSession, dir: String): String =
     PointerFile.read(fsFor(spark, dir), new Path(dir, CurrentPointer))
+
+  /** The committed version, or None before a store's first commit. */
+  def current(fs: FileSystem, dir: String): Option[String] = {
+    val p = new Path(dir, CurrentPointer)
+    if (fs.exists(p)) Some(PointerFile.read(fs, p)) else None
+  }
+
+  /** Committed versions inside the keep window, oldest first. */
+  def committed(spark: SparkSession, dir: String): Seq[String] = {
+    val fs = fsFor(spark, dir)
+    val root = new Path(dir)
+    if (!fs.exists(root)) Nil
+    else fs.listStatus(root).toSeq
+      .map(_.getPath)
+      .filter(p => p.getName.startsWith("v-") &&
+        fs.exists(new Path(p, PointerFile.CommittedMarker)))
+      .map(_.getName).sorted
+  }
+
+  /** A version's `_LABEL`, if its commit recorded one. */
+  def label(spark: SparkSession, dir: String, version: String)
+      : Option[String] = {
+    val fs = fsFor(spark, dir)
+    val p = new Path(s"$dir/$version/$Label")
+    if (fs.exists(p)) Some(PointerFile.read(fs, p)) else None
+  }
 
   /** The SEGMENTS a version's data lives in: its `segments` manifest
     * when present (append versions), else the version itself (a base
@@ -120,25 +148,39 @@ object SegmentedIndex {
     PointerFile.commitVersion(fsFor(spark, dir), new Path(dir),
       version, keep)
 
-  /** Commit a freshly-written APPEND version dir: write its `segments`
-    * manifest (= parent's chain + itself) and optional idempotency
-    * tag, fence against a concurrent writer, then flip `_CURRENT`.
-    * The version dir's DATA files must already be on disk — this is
-    * the metadata + commit half only.
+  /** Commit a freshly-written version dir whose `segments` manifest is
+    * given IN FULL: write the manifest and the optional `_LABEL`,
+    * fence against a concurrent writer, then flip `_CURRENT`. `parent`
+    * is the version this commit was derived from — None for the first
+    * commit on a store that has no `_CURRENT` yet. The version dir's
+    * DATA files must already be on disk — this is the metadata +
+    * commit half only.
+    */
+  def commitManifest(spark: SparkSession, dir: String, version: String,
+                     parent: Option[String], manifest: Seq[String],
+                     label: Option[String] = None, keep: Int = 2): Unit = {
+    val fs = fsFor(spark, dir)
+    writeText(fs, new Path(s"$dir/$version/segments"),
+      manifest.mkString("\n"))
+    label.foreach(l => writeText(fs, new Path(s"$dir/$version/$Label"), l))
+    fenceAndFlip(fs, dir, version, parent, keep)
+  }
+
+  /** Commit a freshly-written APPEND version dir: its manifest is the
+    * parent's chain + itself, plus an optional idempotency tag.
     */
   def commitAppend(spark: SparkSession, dir: String, version: String,
                    parent: String, parentSegs: Seq[String],
                    tag: Option[String], keep: Int = 2): Unit = {
-    val fs = fsFor(spark, dir)
-    val segFile = fs.create(new Path(s"$dir/$version/segments"), true)
-    try segFile.write((parentSegs :+ version).mkString("\n")
-      .getBytes("UTF-8"))
-    finally segFile.close()
-    tag.foreach { t =>
-      val tf = fs.create(new Path(s"$dir/$version/$AppendTag"), true)
-      try tf.write(t.getBytes("UTF-8")) finally tf.close()
-    }
-    fenceAndFlip(fs, dir, version, parent, keep)
+    tag.foreach(t => writeText(fsFor(spark, dir),
+      new Path(s"$dir/$version/$AppendTag"), t))
+    commitManifest(spark, dir, version, Some(parent),
+      parentSegs :+ version, keep = keep)
+  }
+
+  private def writeText(fs: FileSystem, p: Path, text: String): Unit = {
+    val out = fs.create(p, true)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
   }
 
   /** Commit a freshly-written COMPACTED base version: the new dir
@@ -160,16 +202,13 @@ object SegmentedIndex {
                     parent: String, chainTags: Set[String],
                     keep: Int = 2): Unit = {
     val fs = fsFor(spark, dir)
-    if (chainTags.nonEmpty) {
-      val tf = fs.create(new Path(s"$dir/$version/$MultiTags"), true)
-      try tf.write(chainTags.toSeq.sorted.mkString("\n")
-        .getBytes("UTF-8"))
-      finally tf.close()
-    }
-    fenceAndFlip(fs, dir, version, parent, keep)
+    if (chainTags.nonEmpty) writeText(fs,
+      new Path(s"$dir/$version/$MultiTags"),
+      chainTags.toSeq.sorted.mkString("\n"))
+    fenceAndFlip(fs, dir, version, Some(parent), keep)
   }
 
-  /** The shared commit tail of [[commitAppend]]/[[commitCompact]]:
+  /** The shared commit tail of [[commitManifest]]/[[commitCompact]]:
     * single-writer fence (if another writer moved `_CURRENT` since
     * this one read its parent, flipping now would silently drop that
     * writer's segment from the chain — fail loudly instead;
@@ -177,7 +216,7 @@ object SegmentedIndex {
     * the atomic pointer flip + keep-window GC.
     */
   private def fenceAndFlip(fs: FileSystem, dir: String, version: String,
-                           parent: String, keep: Int): Unit =
+                           parent: Option[String], keep: Int): Unit =
     // the fence is only loud-or-clean if no other writer flips INSIDE
     // the read→flip window: un-serialized, two same-JVM writers can
     // both read `parent`, both pass the require, and the second flip
@@ -197,10 +236,11 @@ object SegmentedIndex {
     flipLocks.computeIfAbsent(
       fs.makeQualified(new Path(dir)).toUri.normalize().toString,
       _ => new Object).synchronized {
-      val cur = PointerFile.read(fs, new Path(dir, CurrentPointer))
+      val cur = current(fs, dir)
       require(cur == parent,
         s"concurrent writer detected on $dir: _CURRENT moved " +
-          s"$parent -> $cur while this commit was prepared; the " +
+          s"${parent.getOrElse("(none)")} -> ${cur.getOrElse("(none)")} " +
+          "while this commit was prepared; the " +
           "segmented-index protocol is single-writer — serialize " +
           "writers and retry against the new current version")
       PointerFile.commitVersion(fs, new Path(dir), version, keep)

@@ -29,20 +29,22 @@ import graft.cdc.Materialize
   * ∝ table size — the Hudi upsert shape (`/root/reference/README.md:22`:
   * file groups touched by the batch are the only ones rewritten).
   *
-  * Commits are CRASH-SAFE: each batch writes an immutable,
-  * NEVER-REUSED `batches/b<id>-<attempt>/__bucket=<n>` directory
-  * (existing state is never modified in place — replays and
-  * fresh-checkpoint id reuse write elsewhere), then flips tiny
-  * per-bucket pointer files with an atomic overwrite-rename; committed
-  * state can never be lost mid-commit, only be a mix of per-bucket
-  * versions that the idempotent latest-wins replay converges.
-  * Every commit also appends a MANIFEST (the full bucket → dir map),
-  * giving the store a commit timeline: [[stateAsOf]] reads any commit
-  * inside the retention window ([[Config.retainVersions]]) and GC
-  * deletes only dirs outside it — which simultaneously keeps the
-  * version a concurrent reader resolved just before a flip. This is a
-  * minimal per-file-group commit timeline with time travel — the same
-  * protocol shape a table format provides at lake scale.
+  * Commits ride the engine's one commit protocol
+  * ([[graft.sources.SegmentedIndex]]), the fifth store on it: each
+  * merge or compaction writes its buckets into one fresh, never-reused
+  * `v-*` version dir, records the store's FULL bucket map as that
+  * version's `segments` manifest (one `v-…/__bucket=N` line per live
+  * bucket) and the batch id as its `_LABEL`, then commits with the
+  * single fenced `_CURRENT` flip — Hudi's one atomic instant per
+  * write. A reader resolves `_CURRENT` once and reads that one map, so
+  * it only ever sees whole commits; a crash before the flip leaves the
+  * parent committed and the idempotent latest-wins replay converges;
+  * a second concurrent writer fails loudly at the fence. The retained
+  * versions are the store's commit timeline: [[stateAsOf]] reads any
+  * commit inside the retention window ([[Config.retainVersions]]),
+  * and the shared GC keeps exactly the bucket dirs those commits' maps
+  * reference — which also keeps the version a concurrent reader
+  * resolved just before a flip.
   */
 object CdcPipeline {
 
@@ -54,7 +56,7 @@ object CdcPipeline {
       watermarkDelay: String = "10 minutes",
       numBuckets: Int = 32,
       // how many recent COMMITS stay fully readable: every bucket dir
-      // referenced by the last `retainVersions` manifests survives GC,
+      // referenced by the last `retainVersions` commits survives GC,
       // giving bounded TIME TRAVEL ([[stateAsOf]]) and the
       // concurrent-reader guard in one policy (≥ 2 keeps the version a
       // reader resolved just before a commit)
@@ -64,26 +66,6 @@ object CdcPipeline {
   private[streaming] def bucketOf(cfg: Config): org.apache.spark.sql.Column =
     pmod(xxhash64(cfg.keyCols.map(col): _*), lit(cfg.numBuckets))
       .cast("int")
-
-  /** Optional per-phase wall-clock recorder for [[mergeBatch]] — set
-    * only by `graft.CdcMergeBench` to attribute where a commit's fixed
-    * cost goes (batch materialization vs merge write vs pointer/
-    * manifest/GC filesystem work). None in production: the `timed`
-    * wrapper is a nanoTime pair and a None check per PHASE (≤6 per
-    * commit), not per row.
-    */
-  @volatile private[graft] var phaseRecorder
-      : Option[(String, Double) => Unit] = None
-
-  private def timed[T](phase: String)(f: => T): T =
-    phaseRecorder match {
-      case None => f
-      case Some(rec) =>
-        val t0 = System.nanoTime()
-        val r = f
-        rec(phase, (System.nanoTime() - t0) / 1e9)
-        r
-    }
 
   /** File-backed change-event stream (schema must be supplied: streaming
     * sources cannot infer). `options` passes source tuning through —
@@ -402,7 +384,8 @@ object CdcPipeline {
   /** One micro-batch, partition-scoped: reduce the batch to
     * latest-per-key, read ONLY the state buckets the batch's keys hash
     * into (pure path selection), merge LATEST-WINS BY EVENT TIME, and
-    * commit ONLY those buckets (immutable batch dir + pointer flips).
+    * commit ONLY those buckets (one fresh version dir + one `_CURRENT`
+    * flip; untouched buckets carry over by reference in the manifest).
     *
     * The merge is `latest(state ∪ batch)` per key — not a blind
     * replace — so it converges under ANY replay order: re-delivering an
@@ -452,55 +435,30 @@ object CdcPipeline {
     // anything — folding it here saves one scheduler round trip per
     // commit on the path that matters (non-empty batches), and an
     // empty batch still costs exactly one cheap job.
-    val touched = timed("touched_collect")(
-      latest.select("__bucket").distinct()
-        .collect().map(_.getInt(0)).sorted)
+    val touched = latest.select("__bucket").distinct()
+      .collect().map(_.getInt(0)).sorted
     if (touched.isEmpty) return
-    val fs = new Path(statePath).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(spark, statePath)
+    val parent = resolve(spark, statePath)
     checkBucketLayout(fs, statePath, cfg)
-    val ptrs = readPointers(fs, statePath)
-    val statePaths = touched.flatMap(b =>
-      ptrs.get(b).map(v => bucketPath(statePath, v, b)))
+    val buckets = parent.fold(Map.empty[Int, String])(_.buckets)
+    val statePaths = touched.flatMap(buckets.get)
+      .map(l => s"$statePath/$l")
     // the store's persisted union schema, read ONCE per commit (it
-    // also feeds the grow-only persist below — r14 re-read it there,
-    // one extra FS round trip per commit)
+    // also feeds the grow-only persist below)
     val metaSchema = readMetaSchema(fs, statePath)
-    // Pre-r14 migration fallback (ADVICE r14): no meta/schema yet —
-    // run the one-time footer merge over ALL pointed bucket dirs, not
-    // just the touched ones: a drifted column living only in untouched
-    // buckets would otherwise be missing from the union this commit
-    // persists, and later merges of those buckets under the too-narrow
-    // explicit schema would silently null-and-drop it. One distributed
-    // footer pass, paid exactly once per store lifetime (the persist
-    // below upgrades the store).
-    val inferredSchema: Option[StructType] =
-      if (metaSchema.nonEmpty || ptrs.isEmpty) None
-      else {
-        val allPaths = ptrs.toSeq.sortBy(_._1).map { case (b, v) =>
-          bucketPath(statePath, v, b)
-        }
-        Some(spark.read.option("mergeSchema", "true")
-          .parquet(allPaths: _*).schema)
-      }
     val merged: DataFrame =
       if (statePaths.nonEmpty) {
         // state's bucket is recomputed from the key (deterministic) —
         // files never store it; I/O scoping is pure path selection.
-        // Pointed-at bucket dirs can span batches written under
+        // Referenced bucket dirs can span batches written under
         // DIFFERENT schemas after a drift; the running union schema is
-        // persisted in meta/schema at every commit (r14), so the read
-        // is explicit-schema — files missing a drifted column null it,
-        // exactly the footer-merge union, WITHOUT the per-commit
-        // distributed footer-inference job mergeSchema ran (at lake
-        // scale that job re-reads every live state footer per commit —
-        // a metadata storm the commit log exists to avoid, guide §6).
-        // Pre-r14 stores (no meta/schema yet) use the store-wide
-        // inferred union above; this commit then persists it.
-        val state = (metaSchema.orElse(inferredSchema) match {
-          case Some(sch) => spark.read.schema(sch)
-          case None => spark.read.option("mergeSchema", "true")
-        }).parquet(statePaths.toSeq: _*)
+        // persisted in meta/schema before every flip, so the read is
+        // explicit-schema — files missing a drifted column null it,
+        // WITHOUT a per-commit distributed footer-inference job (at
+        // lake scale that job re-reads every live state footer per
+        // commit — a metadata storm the commit log exists to avoid).
+        val state = readBuckets(spark, statePath, metaSchema, statePaths)
           .withColumn("__bucket", bucketOf(cfg))
         // allowMissingColumns = SCHEMA DRIFT TOLERANCE: a batch that
         // ADDS a column keeps it (state rows read null until touched,
@@ -510,18 +468,10 @@ object CdcPipeline {
           state.unionByName(latest, allowMissingColumns = true),
           cfg.keyCols, order)
       } else latest
-    // COMMIT PROTOCOL (crash-safe, single-writer):
-    //  1. write the merged touched buckets to a NEVER-REUSED dir (the
-    //     attempt suffix makes replays and fresh-checkpoint id reuse
-    //     write elsewhere — live pointers can keep referencing old dirs,
-    //     nothing is ever overwritten in place);
-    //  2. flip each touched bucket's pointer file (atomic overwrite
-    //     rename per bucket). A crash mid-flips leaves every bucket on
-    //     a COMMITTED version (some old, some new); replaying the batch
-    //     converges because the merge is latest-wins idempotent;
-    //  3. GC bucket dirs no pointer references (crash before GC only
-    //     leaves orphans, collected by the next merge).
-    val outDir = uniqueDir("b", batchId)
+    // COMMIT PROTOCOL (crash-safe, single-writer, see the object doc):
+    // write the merged touched buckets into a fresh version dir, then
+    // ONE fenced `_CURRENT` flip publishes the new full bucket map.
+    val version = graft.sources.SegmentedIndex.newVersionName()
     // co-locate each bucket before the partitioned write: without this,
     // every shuffle partition holds rows of every touched bucket and
     // partitionBy fans out up to (partitions × buckets) small files per
@@ -533,262 +483,131 @@ object CdcPipeline {
     // foreachBatch AQE is disabled for stateful queries, so without
     // the count a small batch paid shuffle.partitions near-empty write
     // tasks per commit (pure scheduler overhead at high commit rates).
-    timed("merge_write")(
-      merged.repartition(touched.length, col("__bucket")).write
-        .partitionBy("__bucket")
-        .mode("overwrite")
-        .parquet(s"$statePath/batches/$outDir"))
+    merged.repartition(touched.length, col("__bucket")).write
+      .partitionBy("__bucket")
+      .mode("overwrite")
+      .parquet(s"$statePath/$version")
     // DETERMINISM GUARD (ADVICE r10): `latest` is cache()d, not
     // checkpointed — an eviction-forced recompute between the
     // touched-bucket collect above and the write is only safe if the
     // input batch is replayable (foreachBatch sources are offset-
     // pinned; mergeBatch is also a public API callers can feed
     // anything). If a nondeterministic recompute emitted rows in
-    // buckets ABSENT from `touched`, their pointers would never flip
-    // and the rows would be silently lost. One listStatus turns that
-    // silent loss into a loud failure BEFORE any pointer moves: the
-    // crash leaves only an unreferenced batch dir (GC'd later), state
-    // intact — the same fail-stop localCheckpoint gave, without its
-    // per-commit write-everything job.
-    timed("bucket_guard") {
-      val touchedSet = touched.toSet
-      val written = fs.listStatus(
-          new Path(s"$statePath/batches/$outDir"))
-        .map(_.getPath.getName)
-        .filter(_.startsWith("__bucket="))
-        .map(_.stripPrefix("__bucket=").toInt)
-      val stray = written.filterNot(touchedSet)
-      require(stray.isEmpty,
-        s"non-deterministic batch: write produced bucket(s) " +
-          s"${stray.sorted.mkString(",")} outside the touched set " +
-          s"${touched.mkString(",")} — the input to mergeBatch must be " +
-          "replayable (offset-pinned source or checkpointed DataFrame); " +
-          "state is untouched, the orphan batch dir will be GC'd")
+    // buckets ABSENT from `touched`, the manifest would never name
+    // them and the rows would be silently lost. One listStatus turns
+    // that silent loss into a loud failure BEFORE the flip: the
+    // uncommitted version dir is GC'd later as litter, state intact.
+    val stray = writtenBuckets(fs, statePath, version)
+      .filterNot(touched.toSet)
+    require(stray.isEmpty,
+      s"non-deterministic batch: write produced bucket(s) " +
+        s"${stray.sorted.mkString(",")} outside the touched set " +
+        s"${touched.mkString(",")} — the input to mergeBatch must be " +
+        "replayable (offset-pinned source or checkpointed DataFrame); " +
+        "state is untouched, the uncommitted version will be GC'd")
+    // persist the running union schema BEFORE the flip: a crash in
+    // between leaves meta a (harmless) superset — the next read nulls
+    // the extra columns, the same allowMissingColumns semantics the
+    // merge itself applies. Skipped when unchanged (the no-drift
+    // steady state), so it costs one pointer write per DRIFT, not per
+    // commit.
+    // nullable-normalized: file sources read everything nullable, so
+    // equality against the stored schema is stable and the read-side
+    // schema never asserts a non-null a drifted file can't honor
+    val outSchema = StructType(
+      merged.schema.filterNot(_.name == "__bucket")
+        .map(_.copy(nullable = true)))
+    // GROW-ONLY (ADVICE r14): when every touched bucket is fresh,
+    // merged = latest and outSchema is the batch-only schema — a batch
+    // missing a drifted column that lives on unwritten buckets must not
+    // SHRINK the stored union (later explicit-schema reads of those
+    // buckets would silently null-and-lose the column). Union with the
+    // stored schema by name, keeping the stored fields' types; write
+    // only when the union gains fields (or on the first commit).
+    val grown = metaSchema match {
+      case Some(old) =>
+        val have = old.fieldNames.toSet
+        StructType(old.fields ++ outSchema.fields.filterNot(f =>
+          have(f.name)))
+      case None => outSchema
     }
-    // persist the running union schema BEFORE any pointer moves: a
-    // crash in between leaves meta a (harmless) superset — the next
-    // read nulls the extra columns, the same allowMissingColumns
-    // semantics the merge itself applies. Skipped when unchanged (the
-    // no-drift steady state), so it costs one pointer write per DRIFT,
-    // not per commit.
-    timed("meta_schema") {
-      // nullable-normalized: file sources read everything nullable, so
-      // equality against the stored schema is stable and the read-side
-      // schema never asserts a non-null a drifted file can't honor
-      val outSchema = org.apache.spark.sql.types.StructType(
-        merged.schema.filterNot(_.name == "__bucket")
-          .map(_.copy(nullable = true)))
-      // GROW-ONLY (ADVICE r14): when every touched bucket is fresh,
-      // merged = latest and outSchema is the batch-only schema — a
-      // batch missing a drifted column that lives on unwritten buckets
-      // must not SHRINK the stored union (later explicit-schema reads
-      // of those buckets would silently null-and-lose the column).
-      // Union with the stored schema by name, keeping the stored
-      // fields' types; write only when the union gains fields.
-      val stored = metaSchema.orElse(inferredSchema.map(s =>
-        org.apache.spark.sql.types.StructType(
-          s.map(_.copy(nullable = true)))))
-      val grown = stored match {
-        case Some(old) =>
-          val have = old.fieldNames.toSet
-          org.apache.spark.sql.types.StructType(
-            old.fields ++ outSchema.fields.filterNot(f => have(f.name)))
-        case None => outSchema
-      }
-      // write when the union gained fields — or when no meta/schema
-      // file exists yet (fresh store, or the one-time migration: the
-      // inferred fallback must PERSIST or every commit re-pays the
-      // store-wide footer pass)
-      if (metaSchema.isEmpty || !stored.contains(grown))
-        graft.sources.PointerFile.write(fs,
-          new Path(s"$statePath/meta/schema"), grown.json)
-    }
-    timed("ptr_flips")(
-      touched.foreach(b => writePointer(fs, statePath, b, outDir)))
-    timed("manifest")(
-      writeManifest(fs, statePath, batchId,
-        ptrs ++ touched.map(_ -> outDir)))
-    timed("gc")(
-      gcUnreferenced(fs, statePath, cfg.retainVersions))
+    if (!metaSchema.contains(grown))
+      graft.sources.PointerFile.write(fs,
+        new Path(s"$statePath/meta/schema"), grown.json)
+    commit(spark, statePath, version, parent,
+      buckets ++ touched.map(b => b -> s"$version/__bucket=$b"),
+      batchId, cfg)
   }
 
   /** Read the current materialized state (live rows only — retained
     * tombstones are internal merge state), if any batch has committed.
     */
   def currentState(spark: SparkSession, statePath: String,
-                   opCol: String = "op"): Option[DataFrame] = {
-    val fs = new Path(statePath).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val ptrs = readPointers(fs, statePath)
-    if (ptrs.isEmpty) None
-    else {
-      val paths = ptrs.toSeq.sortBy(_._1).map { case (b, v) =>
-        bucketPath(statePath, v, b)
-      }
-      // bucket dirs may span batches with drifted schemas — union them
-      val df = spark.read.option("mergeSchema", "true").parquet(paths: _*)
-      // null-safe: a null op (possible after payload drift or mixed
-      // old-schema buckets) is NOT a delete — `=!=` would three-value
-      // to NULL and silently hide the row (same trap compact() avoids)
-      Some(if (df.columns.contains(opCol))
-             df.filter(!(col(opCol) <=> "d"))
-           else df)
-    }
-  }
+                   opCol: String = "op"): Option[DataFrame] =
+    resolve(spark, statePath).flatMap(c =>
+      liveRows(spark, statePath, c.buckets, opCol))
 
   /** Compaction: rewrite every live bucket, dropping tombstones whose
     * event time is older than `horizonUs` — the bounded-retention pass
     * the merge protocol assumes (a tombstone only needs to outlive the
     * replay horizon; Kafka compacted-topic delete retention). Uses the
-    * SAME commit protocol as [[mergeBatch]] (immutable batch dir +
-    * per-bucket pointer flips), so it is crash-safe and can run between
-    * any two merges. Live rows and still-needed tombstones are
-    * byte-for-byte re-laid-out (small files merge as a side effect).
+    * SAME commit as [[mergeBatch]] (fresh version dir + one `_CURRENT`
+    * flip), so it is crash-safe and can run between any two merges.
+    * Live rows and still-needed tombstones are byte-for-byte
+    * re-laid-out (small files merge as a side effect).
     */
   def compact(spark: SparkSession, statePath: String, cfg: Config,
               horizonUs: Long, batchId: Long): Unit = {
-    val fs = new Path(statePath).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val ptrs = readPointers(fs, statePath)
-    if (ptrs.isEmpty) return
+    val fs = fsOf(spark, statePath)
+    val parent = resolve(spark, statePath)
+    if (parent.forall(_.buckets.isEmpty)) return
     checkBucketLayout(fs, statePath, cfg)
-    val paths = ptrs.toSeq.sortBy(_._1).map { case (b, v) =>
-      bucketPath(statePath, v, b)
-    }
+    val paths = parent.get.buckets.toSeq.sortBy(_._1)
+      .map { case (_, l) => s"$statePath/$l" }
     val tsCol = col(cfg.orderCols.head)
-    // never-reused dir: a retried compact (same id) or a later merge
-    // batch must not overwrite a dir live pointers still reference
-    val outDir = uniqueDir("c", batchId)
+    val version = graft.sources.SegmentedIndex.newVersionName()
     // null-safe retention: a tombstone with UNKNOWN event time (null
     // ts) must be kept — a three-valued `op != d || ts >= horizon`
     // would evaluate NULL and silently drop it, re-enabling the
     // resurrection this retention exists to prevent
-    val compacted = spark.read.option("mergeSchema", "true")
-      .parquet(paths: _*)
+    readBuckets(spark, statePath, readMetaSchema(fs, statePath), paths)
       .filter(!(col(cfg.opCol) <=> "d" &&
         coalesce(tsCol < horizonUs, lit(false))))
       .withColumn("__bucket", bucketOf(cfg))
-    compacted.write
+      .write
       .partitionBy("__bucket")
       .mode("overwrite")
-      .parquet(s"$statePath/batches/$outDir")
-    // a fully-tombstoned-and-expired bucket writes no dir: drop its
-    // pointer so readers stop referencing it
-    val written = fs.listStatus(
-        new Path(s"$statePath/batches/$outDir"))
-      .map(_.getPath.getName)
-      .filter(_.startsWith("__bucket="))
-      .map(_.stripPrefix("__bucket=").toInt).toSet
-    ptrs.keys.foreach { b =>
-      if (written.contains(b)) writePointer(fs, statePath, b, outDir)
-      else fs.delete(new Path(s"$statePath/ptr/$b"), false)
-    }
-    writeManifest(fs, statePath, batchId,
-      ptrs.keys.filter(written.contains).map(_ -> outDir).toMap)
-    gcUnreferenced(fs, statePath, cfg.retainVersions)
+      .parquet(s"$statePath/$version")
+    // a fully-tombstoned-and-expired bucket writes no dir: it leaves
+    // the bucket map, so readers stop referencing it
+    commit(spark, statePath, version, parent,
+      writtenBuckets(fs, statePath, version)
+        .map(b => b -> s"$version/__bucket=$b").toMap,
+      batchId, cfg)
   }
 
-  /** COMMIT MANIFESTS — the state store's timeline. Every successful
-    * merge/compact appends one manifest: the FULL bucket → dir map as
-    * of that commit, under a zero-padded monotonic sequence (single
-    * writer, same assumption as the pointer protocol). Manifests are
-    * what make [[stateAsOf]] possible and what GC retention is defined
-    * over — the same two jobs a lake table format's commit log does.
+  /** The commit timeline: (commit sequence, batch id), oldest first —
+    * the commits inside the retention window.
     */
-  /** The store's persisted running-union schema (`meta/schema`,
-    * StructType JSON), maintained by every merge commit since r14 —
-    * the explicit read schema that replaces per-commit footer-merge
-    * inference. Absent on pre-r14 stores (readers fall back to one
-    * mergeSchema pass, and the next commit persists the union).
-    */
-  private def readMetaSchema(fs: org.apache.hadoop.fs.FileSystem,
-                             statePath: String)
-      : Option[org.apache.spark.sql.types.StructType] = {
-    val p = new Path(s"$statePath/meta/schema")
-    if (!fs.exists(p)) None
-    else org.apache.spark.sql.types.DataType
-      .fromJson(graft.sources.PointerFile.read(fs, p)) match {
-      case st: org.apache.spark.sql.types.StructType => Some(st)
-      case _ => None
-    }
-  }
-
-  private def writeManifest(fs: org.apache.hadoop.fs.FileSystem,
-                            statePath: String, batchId: Long,
-                            ptrs: Map[Int, String]): Unit = {
-    val dir = new Path(s"$statePath/manifests")
-    fs.mkdirs(dir)
-    val seq = listManifests(fs, statePath).lastOption
-      .map(_._1 + 1).getOrElse(0L)
-    val content = (s"batchId=$batchId" +:
-      ptrs.toSeq.sortBy(_._1).map { case (b, v) => s"$b $v" })
-      .mkString("\n")
-    graft.sources.PointerFile.write(fs, new Path(dir, f"$seq%09d"),
-      content)
-  }
-
-  /** (seq, manifest path), ascending. */
-  private def listManifests(fs: org.apache.hadoop.fs.FileSystem,
-                            statePath: String): Seq[(Long, Path)] = {
-    val dir = new Path(s"$statePath/manifests")
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq
-      .filter(s => s.getPath.getName.forall(_.isDigit))
-      .map(s => s.getPath.getName.toLong -> s.getPath)
-      .sortBy(_._1)
-  }
-
-  private def parseManifest(fs: org.apache.hadoop.fs.FileSystem,
-                            p: Path): (Long, Map[Int, String]) = {
-    val lines = graft.sources.PointerFile.read(fs, p).split("\n")
-    val batchId = lines.head.stripPrefix("batchId=").toLong
-    val ptrs = lines.tail.filter(_.nonEmpty).map { l =>
-      val Array(b, v) = l.split(" ", 2)
-      b.toInt -> v
-    }.toMap
-    (batchId, ptrs)
-  }
-
-  /** The commit timeline: (commit sequence, batch id), oldest first. */
-  def commits(spark: SparkSession, statePath: String): Seq[(Long, Long)] = {
-    val fs = new Path(statePath).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    listManifests(fs, statePath).map { case (seq, p) =>
-      seq -> parseManifest(fs, p)._1
-    }
-  }
+  def commits(spark: SparkSession, statePath: String): Seq[(Long, Long)] =
+    timeline(spark, statePath).map(c => c._2 -> c._3)
 
   /** TIME TRAVEL: the materialized state as of the commit for
     * `batchId` (its most recent commit, if ids recur). Readable for
-    * the last `retainVersions` commits; older versions' bucket dirs
-    * are GC'd and the read fails fast with the missing paths rather
-    * than silently returning partial state.
+    * the last `retainVersions` commits, decided by commit order at the
+    * moment each commit ran; an older commit fails fast rather than
+    * returning partial state, however far the async vacuum has got.
     */
   def stateAsOf(spark: SparkSession, statePath: String, batchId: Long,
                 opCol: String = "op"): Option[DataFrame] = {
-    val fs = new Path(statePath).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val hit = listManifests(fs, statePath).reverse
-      .map(m => parseManifest(fs, m._2))
-      .find(_._1 == batchId)
+    val log = timeline(spark, statePath)
+    val hit = log.reverse.find(_._3 == batchId)
     require(hit.nonEmpty,
-      s"no commit for batchId=$batchId at $statePath " +
-        s"(commits: ${commits(spark, statePath).map(_._2).mkString(",")})")
-    val ptrs = hit.get._2
-    if (ptrs.isEmpty) None
-    else {
-      val paths = ptrs.toSeq.sortBy(_._1).map { case (b, v) =>
-        bucketPath(statePath, v, b)
-      }
-      val missing = paths.filterNot(p => fs.exists(new Path(p)))
-      require(missing.isEmpty,
-        s"state version for batchId=$batchId is beyond the retention " +
-          s"window (retainVersions) — GC removed: ${missing.mkString(", ")}")
-      val df = spark.read.option("mergeSchema", "true").parquet(paths: _*)
-      Some(if (df.columns.contains(opCol))
-             df.filter(!(col(opCol) <=> "d"))
-           else df)
-    }
+      s"no commit for batchId=$batchId at $statePath within the " +
+        "retention window (the last retainVersions commits; commits: " +
+        s"${log.map(_._3).mkString(",")})")
+    liveRows(spark, statePath,
+      bucketMap(spark, statePath, hit.get._1), opCol)
   }
 
   /** STATE DIFF between two commits — CDC on the materialized state:
@@ -827,121 +646,122 @@ object CdcPipeline {
         bVer.zip(cfg.orderCols).map { case (c, n) => c.as(s"to_$n") }: _*)
   }
 
-  /** bucket → batch-dir name, from the tiny per-bucket pointer files. */
-  private def readPointers(fs: org.apache.hadoop.fs.FileSystem,
-                           statePath: String): Map[Int, String] = {
-    val dir = new Path(s"$statePath/ptr")
-    if (!fs.exists(dir)) Map.empty
-    else fs.listStatus(dir).toSeq
-      .filter(s => !s.getPath.getName.endsWith(".tmp"))
-      .map { st =>
-        st.getPath.getName.toInt ->
-          graft.sources.PointerFile.read(fs, st.getPath)
-      }.toMap
+  /** A committed version of the store and its bucket map (bucket →
+    * `v-…/__bucket=N` manifest line).
+    */
+  private final case class Committed(version: String,
+                                     buckets: Map[Int, String])
+
+  private def fsOf(spark: SparkSession, statePath: String) =
+    new Path(statePath).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+
+  /** `_CURRENT`, resolved once, with its manifest — None before the
+    * first commit. A store still in the pre-protocol per-bucket `ptr/`
+    * layout is refused loudly, not migrated or misread as empty.
+    */
+  private def resolve(spark: SparkSession, statePath: String)
+      : Option[Committed] = {
+    val cur = graft.sources.SegmentedIndex.current(
+      fsOf(spark, statePath), statePath)
+    if (cur.isEmpty) refuseRetiredLayout(spark, statePath)
+    cur.map(v => Committed(v, bucketMap(spark, statePath, v)))
   }
 
-  /** Atomic per-bucket pointer flip — the shared
-    * [[graft.sources.PointerFile]] primitive (write a unique tmp,
-    * ONE OVERWRITE-rename; a delete-then-rename pair would leave a
-    * no-pointer window a crash could turn into GC deleting the
-    * bucket's only data).
-    */
-  private def writePointer(fs: org.apache.hadoop.fs.FileSystem,
-                           statePath: String, bucket: Int,
-                           batchDir: String): Unit =
-    graft.sources.PointerFile.write(fs,
-      new Path(s"$statePath/ptr/$bucket"), batchDir)
+  private def refuseRetiredLayout(spark: SparkSession,
+                                  statePath: String): Unit =
+    if (fsOf(spark, statePath).exists(new Path(s"$statePath/ptr")))
+      throw new IllegalStateException(
+        s"$statePath is a CDC store in the retired per-bucket ptr/ " +
+          "layout; it is not readable by this version — rebuild it by " +
+          "replaying its change feed into a fresh path")
 
-  /** Never-reused output dir name: id + monotonic attempt stamp. */
-  private def uniqueDir(prefix: String, batchId: Long): String =
-    s"$prefix$batchId-${System.currentTimeMillis()}-${
-      java.util.UUID.randomUUID().toString.take(8)}"
+  private def bucketMap(spark: SparkSession, statePath: String,
+                        version: String): Map[Int, String] =
+    graft.sources.SegmentedIndex.segments(spark, statePath, version)
+      .map(l => l.substring(l.lastIndexOf("__bucket=") + 9).toInt -> l)
+      .toMap
 
-  /** The state-layout path of one bucket's current data. */
-  private def bucketPath(statePath: String, version: String,
-                         bucket: Int): String =
-    s"$statePath/batches/$version/__bucket=$bucket"
-
-  /** Write-time millis embedded in a [[uniqueDir]] name (`p<id>-<ms>-
-    * <uuid>`); 0 for anything unparseable so unknown dirs sort oldest.
-    */
-  private def dirMillis(name: String): Long = {
-    val parts = name.split("-")
-    if (parts.length >= 2)
-      try parts(1).toLong catch { case _: NumberFormatException => 0L }
-    else 0L
+  /** A version's `_LABEL`: (commit sequence, batch id). */
+  private def label(spark: SparkSession, statePath: String,
+                    version: String): (Long, Long) = {
+    val l = graft.sources.SegmentedIndex.label(spark, statePath, version)
+    require(l.nonEmpty, s"CDC commit $statePath/$version has no label")
+    val Array(seq, batchId) = l.get.split(" ")
+    (seq.toLong, batchId.toLong)
   }
 
-  /** Delete bucket dirs outside the retention window: every
-    * (bucket, dir) referenced by the LAST `retain` MANIFESTS — plus
-    * current pointers, plus (for states predating manifests) each
-    * bucket's most recently superseded version — survives; everything
-    * older goes, then-empty batch dirs with it. Retention ≥ 2 also
-    * covers the concurrent-reader race ([[currentState]] resolves
-    * pointers eagerly, scans lazily — the version a reader resolved
-    * just before a commit is still referenced by the previous
-    * manifest), the same policy [[graft.sim.Similarity.buildIvfIndex]]
-    * hard-codes as keep-2.
-    */
-  private def gcUnreferenced(fs: org.apache.hadoop.fs.FileSystem,
-                             statePath: String, retain: Int): Unit = {
-    val ptrs = readPointers(fs, statePath)
-    val batchesDir = new Path(s"$statePath/batches")
-    if (!fs.exists(batchesDir)) return
-    // retained (bucket, dir) references from the last `retain` commits
-    val retained: Set[(Int, String)] = listManifests(fs, statePath)
-      .takeRight(math.max(retain, 1))
-      .flatMap { case (_, p) =>
-        parseManifest(fs, p)._2.toSeq.map { case (b, v) => (b, v) }
-      }.toSet
-    val batchDirs = fs.listStatus(batchesDir)
-    // bucket → every (batch dir, sub path) holding a version of it
-    val byBucket = scala.collection.mutable.Map
-      .empty[Int, List[(String, Path)]]
-    batchDirs.foreach { bd =>
-      val batchName = bd.getPath.getName
-      fs.listStatus(bd.getPath)
-        .filter(_.getPath.getName.startsWith("__bucket="))
-        .foreach { sub =>
-          val b = sub.getPath.getName.stripPrefix("__bucket=").toInt
-          byBucket(b) = (batchName, sub.getPath) ::
-            byBucket.getOrElse(b, Nil)
-        }
+  /** Retained commits as (version, sequence, batch id), oldest first. */
+  private def timeline(spark: SparkSession, statePath: String)
+      : Seq[(String, Long, Long)] = {
+    val vs = graft.sources.SegmentedIndex.committed(spark, statePath)
+    if (vs.isEmpty) refuseRetiredLayout(spark, statePath)
+    vs.map { v =>
+      val (seq, id) = label(spark, statePath, v)
+      (v, seq, id)
     }
-    byBucket.foreach { case (b, dirs) =>
-      val current = ptrs.get(b)
-      val superseded = dirs.filterNot(d => current.contains(d._1))
-      // legacy guard for states whose history predates manifests
-      val keepPrev =
-        if (superseded.isEmpty) None
-        else Some(superseded.maxBy(d => (dirMillis(d._1), d._1))._1)
-      dirs.foreach { case (name, path) =>
-        if (!current.contains(name) && !keepPrev.contains(name) &&
-            !retained((b, name)))
-          fs.delete(path, true)
-      }
-    }
-    // empty = no bucket dirs remain (NB: "__bucket=" also starts
-    // with '_', so a bare underscore test would match data dirs too)
-    batchDirs.foreach { bd =>
-      if (fs.exists(bd.getPath) && !fs.listStatus(bd.getPath)
-          .exists(_.getPath.getName.startsWith("__bucket=")))
-        fs.delete(bd.getPath, true)
-    }
-    // MANIFEST GC (r10 verdict item 5, the one unbounded accretion the
-    // small-file audit found): every commit appends one manifest file
-    // and nothing ever deleted them — a months-long low-rate stream
-    // accretes one per commit forever. Commits older than the keep
-    // window are unreadable anyway (their bucket dirs are GC'd above),
-    // so their manifests are dead metadata. Keep retain + 1: the last
-    // `retain` readable commits PLUS the most recently aged-out one,
-    // whose manifest is what lets stateAsOf fail with the precise
-    // "beyond the retention window" diagnostic instead of a bare
-    // "no commit" (TimeTravelSpec pins that error). Sequence numbering
-    // survives: writeManifest derives the next seq from the NEWEST
-    // manifest, which is always kept.
-    listManifests(fs, statePath)
-      .dropRight(math.max(retain, 1) + 1)
-      .foreach { case (_, p) => fs.delete(p, false) }
   }
+
+  /** Publish `version` as the store's new full bucket map through the
+    * shared fenced `_CURRENT` flip; the label names the commit with the
+    * parent's sequence + 1 and the batch id.
+    */
+  private def commit(spark: SparkSession, statePath: String,
+                     version: String, parent: Option[Committed],
+                     buckets: Map[Int, String], batchId: Long,
+                     cfg: Config): Unit =
+    graft.sources.SegmentedIndex.commitManifest(spark, statePath, version,
+      parent.map(_.version), buckets.toSeq.sortBy(_._1).map(_._2),
+      label = Some(s"${parent.fold(0L)(p =>
+        label(spark, statePath, p.version)._1 + 1)} $batchId"),
+      keep = math.max(cfg.retainVersions, 1))
+
+  /** Bucket numbers a freshly-written version dir holds. */
+  private def writtenBuckets(fs: org.apache.hadoop.fs.FileSystem,
+                             statePath: String, version: String)
+      : Seq[Int] =
+    fs.listStatus(new Path(s"$statePath/$version")).toSeq
+      .map(_.getPath.getName)
+      .filter(_.startsWith("__bucket="))
+      .map(_.stripPrefix("__bucket=").toInt)
+
+  /** The store's persisted running-union schema (`meta/schema`,
+    * StructType JSON), written before every flip that grows it — the
+    * ONE read schema of merges, compactions and readers.
+    */
+  private def readMetaSchema(fs: org.apache.hadoop.fs.FileSystem,
+                             statePath: String): Option[StructType] = {
+    val p = new Path(s"$statePath/meta/schema")
+    if (!fs.exists(p)) None
+    else org.apache.spark.sql.types.DataType
+      .fromJson(graft.sources.PointerFile.read(fs, p)) match {
+      case st: StructType => Some(st)
+      case _ => None
+    }
+  }
+
+  /** Committed bucket dirs read with the store schema. */
+  private def readBuckets(spark: SparkSession, statePath: String,
+                          schema: Option[StructType], paths: Seq[String])
+      : DataFrame =
+    spark.read.schema(schema.getOrElse(throw new IllegalStateException(
+      s"$statePath has committed buckets but no meta/schema")))
+      .parquet(paths: _*)
+
+  /** Live rows of one bucket map; None for an empty map. */
+  private def liveRows(spark: SparkSession, statePath: String,
+                       buckets: Map[Int, String], opCol: String)
+      : Option[DataFrame] =
+    if (buckets.isEmpty) None
+    else {
+      val df = readBuckets(spark, statePath,
+        readMetaSchema(fsOf(spark, statePath), statePath),
+        buckets.toSeq.sortBy(_._1).map { case (_, l) => s"$statePath/$l" })
+      // null-safe: a null op (possible after payload drift or mixed
+      // old-schema buckets) is NOT a delete — `=!=` would three-value
+      // to NULL and silently hide the row (same trap compact() avoids)
+      Some(if (df.columns.contains(opCol))
+             df.filter(!(col(opCol) <=> "d"))
+           else df)
+    }
 }

@@ -154,10 +154,11 @@ object MaintainProbe {
     // ---- CDC upsert store: the ~100-commit file-count audit ----
     // A months-long low-rate stream is ~1 commit per trigger; the
     // store's live file population must reach a PLATEAU (buckets ×
-    // retained versions + pointers + bounded manifests), not grow with
-    // commit count. Pre-r11 this curve diverged: one manifest file per
-    // commit accreted forever (gcUnreferenced now bounds manifests to
-    // retain + 1). Replays the sf feed as `cdcCommits` time-ordered
+    // retained versions + their manifests), not grow with commit
+    // count. Pre-r11 this curve diverged: one manifest file per commit
+    // accreted forever (the shared version GC in
+    // PointerFile.commitVersion keeps only the retained commits'
+    // metadata). Replays the sf feed as `cdcCommits` time-ordered
     // micro-batches; prints the curve every 10 commits and FAILS if
     // the second half still grows.
     val cdcCommits = sys.env.getOrElse("SPARK_GRAFT_CDC_COMMITS", "100")

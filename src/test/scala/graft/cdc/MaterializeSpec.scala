@@ -34,6 +34,14 @@ class MaterializeSpec extends SparkSpec {
     assert(mismatch.count() === 0)
   }
 
+  test("latest rejects an input that already has a __latest column") {
+    val e = intercept[IllegalArgumentException] {
+      Materialize.latest(feed.withColumn("__latest", lit(1)), Seq("key"),
+        Seq(col("ts_us"), col("event_id")))
+    }
+    assert(e.getMessage.contains("__latest"))
+  }
+
   test("currentState drops keys whose latest op is a delete") {
     val state = Materialize.currentState(feed, Seq("key"),
       Seq(col("ts_us"), col("event_id")))

@@ -156,4 +156,34 @@ class PointerFileSpec extends SparkSpec {
     PointerFile.commitVersion(fs, base, "v-004")
     assert(dirs(base) == Set("v-003", "v-004"))
   }
+
+  test("a manifest line naming a sub-dir pins only that sub-dir, and a " +
+       "version leaving the window stops counting as committed at once") {
+    val base = new Path(
+      java.nio.file.Files.createTempDirectory("ptrsub").toString)
+    val fs = fsFor(base)
+    def commit(v: String, subs: Seq[String], manifest: Seq[String]): Unit = {
+      subs.foreach(b =>
+        fs.create(new Path(base, s"$v/$b/part-0"), true).close())
+      val out = fs.create(new Path(base, s"$v/segments"), true)
+      try out.write(manifest.mkString("\n").getBytes("UTF-8"))
+      finally out.close()
+      PointerFile.commitVersion(fs, base, v)
+    }
+    def has(p: String) = fs.exists(new Path(base, p))
+    // copy-on-write bucket maps: each commit rewrites bucket a only
+    commit("v-001", Seq("a", "b"), Seq("v-001/a", "v-001/b"))
+    commit("v-002", Seq("a"), Seq("v-002/a", "v-001/b"))
+    commit("v-003", Seq("a"), Seq("v-003/a", "v-001/b"))
+    // v-001 left the window: no longer committed, before any vacuum
+    assert(!has(s"v-001/${PointerFile.CommittedMarker}"))
+    assert(dirs(base) == Set("v-001", "v-002", "v-003"))
+    assert(has("v-001/b") && !has("v-001/a") && !has("v-001/segments"),
+      "the kept maps reference v-001/b only")
+    commit("v-004", Seq("a", "b"), Seq("v-004/a", "v-004/b"))
+    // v-003's map still names v-001/b
+    assert(dirs(base) == Set("v-001", "v-003", "v-004"))
+    commit("v-005", Seq("a"), Seq("v-005/a", "v-004/b"))
+    assert(dirs(base) == Set("v-004", "v-005"))
+  }
 }

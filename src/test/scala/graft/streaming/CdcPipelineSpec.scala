@@ -122,7 +122,7 @@ class CdcPipelineSpec extends SparkSpec {
     CdcPipeline.mergeBatch(full, state, cfg, 0L)
 
     def snapshot(): Map[String, (Long, String)] =
-      JFiles.walk(Paths.get(s"$state/batches")).iterator().asScala
+      JFiles.walk(Paths.get(state)).iterator().asScala
         .filter(p => p.toString.endsWith(".parquet"))
         .map { p =>
           val bytes = JFiles.readAllBytes(p)
@@ -257,27 +257,23 @@ class CdcPipelineSpec extends SparkSpec {
     assert(s2.filter(col("source_region") === "eu-central").count() > 0)
   }
 
-  test("pre-r14 store (no meta/schema): the migration fallback unions " +
-       "over ALL pointed buckets, not just the touched ones") {
-    import org.apache.spark.sql.types.{DataType, StructType}
-    val base = Files.createTempDirectory("cdcfall").toString
+  test("a store in the retired per-bucket ptr/ layout is refused " +
+       "loudly, not migrated or read as empty") {
+    val base = Files.createTempDirectory("cdcptr").toString
     val state = s"$base/state"
-    val cfg = CdcPipeline.Config(numBuckets = 8)
-    // drifted column lands in some buckets, then simulate a pre-r14
-    // store by deleting the persisted union
-    val b1 = feed.filter(col("ts_us") < cutoffUs).drop("ts")
-      .withColumn("source_region", lit("eu-central"))
-    CdcPipeline.mergeBatch(b1, state, cfg, batchId = 0)
-    Files.delete(java.nio.file.Paths.get(s"$state/meta/schema"))
-    // next batch touches a SUBSET of buckets and lacks the column; the
-    // fallback inference must still find it in the untouched buckets
-    val oneKey = feed.drop("ts").limit(1)
-    CdcPipeline.mergeBatch(oneKey, state, cfg, batchId = 1)
-    val persisted = DataType.fromJson(Files.readString(
-      java.nio.file.Paths.get(s"$state/meta/schema")))
-      .asInstanceOf[StructType]
-    assert(persisted.fieldNames.contains("source_region"),
-      "fallback union missed a drifted column in untouched buckets")
+    Files.createDirectories(java.nio.file.Paths.get(s"$state/ptr"))
+    Files.writeString(java.nio.file.Paths.get(s"$state/ptr/0"),
+      "b0-1700000000000-0a1b2c3d")
+    val refusals = Seq(
+      () => CdcPipeline.mergeBatch(feed.drop("ts"), state,
+        CdcPipeline.Config(), 0L),
+      () => CdcPipeline.currentState(spark, state),
+      () => CdcPipeline.commits(spark, state),
+      () => CdcPipeline.stateAsOf(spark, state, 0L))
+    refusals.foreach { f =>
+      val e = intercept[IllegalStateException](f())
+      assert(e.getMessage.contains("ptr/"))
+    }
   }
 
   test("replaying an older batch after a newer one is a no-op") {
@@ -325,14 +321,12 @@ class CdcPipelineSpec extends SparkSpec {
       .select("key", "event_id", "ts_us", "value", "props")
       .collect().map(_.toString).toSet
     def tombstones(): Long = {
-      // internal state view: read all pointed bucket dirs directly
-      val ptrDir = new java.io.File(s"$state/ptr")
-      val paths = ptrDir.listFiles().filter(f => !f.getName.contains("."))
-        .map { f =>
-          val v = scala.io.Source.fromFile(f).mkString.trim
-          s"$state/batches/$v/__bucket=${f.getName}"
-        }
-      spark.read.parquet(paths.toSeq: _*).filter(col("op") === "d").count()
+      // internal state view: read every bucket dir the committed
+      // manifest names directly
+      val cur = graft.sources.SegmentedIndex.currentVersion(spark, state)
+      val paths = graft.sources.SegmentedIndex.segments(spark, state, cur)
+        .map(l => s"$state/$l")
+      spark.read.parquet(paths: _*).filter(col("op") === "d").count()
     }
     val tombsBefore = tombstones()
     assert(tombsBefore > 0, "fixture needs at least one tombstone")
